@@ -5,8 +5,8 @@ cited instead from the public literature):
 
   * kmeans_cluster — distributed Lloyd k-means over an embedding column:
     per-iteration cell assignment is a single native projection (or an
-    Arrow kernel for large k), the centroid update is one partial
-    aggregation whose shuffle volume is O(partitions × k × dim) —
+    Arrow kernel for large k), the centroid update is one shuffle-free
+    per-task numpy fold whose collect moves ≤ tasks × k rows —
     independent of corpus size — and only k×dim numbers ever reach the
     driver.  quantizer='hash' makes the whole fit a pure function of the
     data that a DuckDB differential oracle replays value-for-value
@@ -21,10 +21,9 @@ cited instead from the public literature):
     LSH-pair path, prototype_prune the k-means-cell path.
 
 Scale shape: kmeans_cluster never shuffles the corpus — each iteration
-is scan → map-side partial agg; only the k-row (or k×dim-row) centroid
-table moves.  prototype_prune shuffles the slim (id, cluster, sim)
-triple once on cluster_id and reuses that partitioning for both its
-windows.
+is one scan → per-task partial fold; only the k-row partials move.
+prototype_prune shuffles the slim (id, cluster, sim) triple once on
+cluster_id and reuses that partitioning for both its windows.
 """
 
 from __future__ import annotations
@@ -32,9 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rbql_spark.ops.similarity import (
-    _cell_exprs, _round6_np, _train_centroids, cosine,
-)
+from rbql_spark.ops.similarity import _round6_np, _train_centroids, cosine
 
 
 def _assign_sim_exprs(centroids: list[list[float]]):
@@ -143,8 +140,7 @@ def kmeans_cluster(corpus: DataFrame, k: int = 8, n_iter: int = 2,
                    quantizer: str = 'hash',
                    id_col: str = 'vec_id', vec_col: str = 'embedding',
                    seed: int = 42,
-                   centroid_strategy: str = 'auto',
-                   iter_impl: str = 'arrow') -> DataFrame:
+                   centroid_strategy: str = 'auto') -> DataFrame:
     """Lloyd k-means over an embedding column → (id, cluster_id,
     centroid_sim): each row's final cell and its cosine to that cell's
     centroid.
@@ -155,25 +151,27 @@ def kmeans_cluster(corpus: DataFrame, k: int = 8, n_iter: int = 2,
     'kmeans' delegates the whole fit to seeded Spark ML k-means (better
     centroids, not bit-replayable) and n_iter is its maxIter.
 
-    Each hash-mode round: (1) assign every row to its nearest current
-    centroid — one native projection, no shuffle; (2) new centroid =
-    element-wise mean of the members, computed as a posexplode partial
-    aggregation whose combine happens map-side, so the shuffle carries
-    only O(partitions × k × dim) rows regardless of corpus size; empty
-    cells keep their previous centroid.  Means are rounded
-    half-away-from-zero to 6 places so both engines iterate from
-    IDENTICAL centroids — floating-point summation order can never
-    compound across rounds.  Residual caveat (iter_impl='arrow', the
-    default): per-task numpy partial sums accumulate in a different
-    order than the single Spark aggregation ('native'), so when a cell
-    mean lands within an ulp of a rounding half-grid point the snapped
-    centroid can differ by 1e-6 between the two impls — the DuckDB
-    replay contract for quantizer='hash' is exact under 'native' and
-    best-effort (never observed diverging on the test corpora, and
-    parity-tested per round) under 'arrow'; pass iter_impl='native'
-    where bit-replay must be guaranteed.  The k×dim centroid state lives on the
-    driver between rounds (bounded by construction — the same contract
-    as ivf_ann_topk's inline centroids).
+    Each hash-mode round is one shuffle-free scan of the cached
+    projection (_iter_stats_arrow): every task assigns its rows to the
+    nearest current centroid (round-6 cosine, ties to the lowest cell)
+    and folds the members' coordinates into one k-row partial, so the
+    collect moves ≤ tasks × k rows regardless of corpus size.  The
+    driver adds the partials; a new centroid is the element-wise mean
+    of its members rounded half-away-from-zero to 6 places, and an
+    empty cell keeps its previous centroid.  The k×dim centroid state
+    lives on the driver between rounds (bounded by construction — the
+    same contract as ivf_ann_topk's inline centroids).
+
+    Replay contract for quantizer='hash': the DuckDB replay
+    (`_kmeans_replay_sql` in the gate file) unrolls the same rounds in
+    SQL, and because every round snaps the means to the 1e-6 grid, both
+    engines iterate from identical centroids and summation-order drift
+    cannot compound across rounds.  Within one round the sums are
+    grouped differently (per-task numpy partials, then a driver add,
+    against one SQL average), so a cell mean that lands within an ulp
+    of a rounding half-grid point can snap 1e-6 apart; this has not
+    been observed on the test corpora, where cluster ids match exactly
+    and centroid sims to 6 places.
 
     centroid_strategy: 'inline' embeds centroids as plan literals (zero
     Python stages; plan grows with k), 'arrow' ships them as a broadcast
@@ -205,39 +203,17 @@ def kmeans_cluster(corpus: DataFrame, k: int = 8, n_iter: int = 2,
         import numpy as np
         dim = len(cent[0])
         for _ in range(n_iter):
-            if iter_impl == 'arrow':
-                parts = _iter_stats_arrow(cached, cent)
-                S = np.zeros((k, dim), dtype=np.float64)
-                N = np.zeros(k, dtype=np.int64)
-                for r in parts:
-                    S[int(r['cell'])] += np.asarray(r['s'],
-                                                    dtype=np.float64)
-                    N[int(r['cell'])] += int(r['n'])
-                new = [list(cv) for cv in cent]
-                for cell in range(k):
-                    if N[cell] > 0:
-                        new[cell] = [float(_round6_np(S[cell][p] / N[cell]))
-                                     for p in range(dim)]
-                cent = new
-                continue
-            argmax_cell, _ = _cell_exprs(cent, 1)
-            # two selects: a generator (posexplode) in the same projection
-            # as the struct-argmax strips the struct-field aliases
-            # (Spark generator rewrite), so assign first, then explode
-            asg = (cached.select(argmax_cell(F.col('__cv')).alias('cell'),
-                                 '__cv')
-                         .select('cell',
-                                 F.posexplode('__cv').alias('pos', 'x')))
-            stats = (asg.groupBy('cell', 'pos')
-                        .agg(F.sum('x').alias('s'),
-                             F.count(F.lit(1)).alias('n'))
-                        .toPandas())
+            parts = _iter_stats_arrow(cached, cent)
+            S = np.zeros((k, dim), dtype=np.float64)
+            N = np.zeros(k, dtype=np.int64)
+            for r in parts:
+                S[int(r['cell'])] += np.asarray(r['s'], dtype=np.float64)
+                N[int(r['cell'])] += int(r['n'])
             new = [list(cv) for cv in cent]
-            for cell, grp in stats.groupby('cell'):
-                vec = [0.0] * dim
-                for pos, s, n in zip(grp['pos'], grp['s'], grp['n']):
-                    vec[int(pos)] = float(_round6_np(float(s) / float(n)))
-                new[int(cell)] = vec
+            for cell in range(k):
+                if N[cell] > 0:
+                    new[cell] = [float(_round6_np(S[cell][p] / N[cell]))
+                                 for p in range(dim)]
             cent = new
     finally:
         if n_iter > 1:

@@ -28,10 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Mersenne prime 2^31-1: universal-hashing modulus for minhash.  Shingle
-# hashes are masked to 32 bits and a < 2^30 so a*s + b < 2^62 — no long
-# overflow under Spark's default ANSI arithmetic.
+# hashes are 32-bit and a < 2^30 so a*s + b < 2^62 — no int64 overflow.
 _PRIME31 = (1 << 31) - 1
-_MASK32 = (1 << 32) - 1
 
 # Vectorized-kernel memory bounds.  Both are per-worker working-set caps, NOT
 # correctness knobs: results are identical at any setting (tests run them at
@@ -327,7 +325,7 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
                         text_col: str = 'text', id_col: str = 'doc_id',
                         shingle_k: int = 3, min_hits: int = 1,
                         bloom_bits: int = 1 << 20, bloom_hashes: int = 3,
-                        seed: int = 42, impl: str = 'native') -> DataFrame:
+                        seed: int = 42) -> DataFrame:
     """Bloom-filter decontamination — the scale path of decontaminate()
     for when the benchmark side is itself corpus-sized (e.g. "flag
     anything that overlaps our eval CORPUS", or cross-corpus leakage
@@ -346,30 +344,22 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
     which is the safe direction for contamination screens: borderline
     docs get a second exact pass or are dropped.
 
-    impl='native' (default) keeps everything in Catalyst: the set-bit
-    positions stay a DataFrame, broadcast-hash-joined against the
-    corpus' exploded (shingle × position) stream — one corpus scan, no
-    corpus shuffle, the only shuffles are over surviving hit rows; a
-    shingle is bloom-positive iff all `bloom_hashes` of its position
-    rows find a partner (count == k is exact even when a shingle's own
-    positions collide).  This path is replayed value-for-value by the
-    DuckDB oracle.  impl='bitmap' packs the same positions into a
-    numpy bit array on the driver (bloom_bits/8 bytes, e.g. 128 KiB at
-    the default) broadcast to an Arrow mapInPandas membership kernel —
-    position hashing still native, only the O(1) bit test in Python —
-    for when even the position table is too wide to hash-join.  Both
-    impls return identical rows (engines-agree tested).
+    Everything stays in Catalyst: the set-bit positions stay a
+    DataFrame, broadcast-hash-joined against the corpus' exploded
+    (shingle × position) stream — one corpus scan, no corpus shuffle,
+    the only shuffles are over surviving hit rows; a shingle is
+    bloom-positive iff all `bloom_hashes` of its position rows find a
+    partner (count == k is exact even when a shingle's own positions
+    collide).  The DuckDB oracle replays this value-for-value.
+    (stream_decontaminate_bloom packs the same positions into a
+    broadcast numpy bitmap instead — its stateless per-batch shape.)
 
     Output is UNORDERED (pair/label producers never pay a display sort).
 
     Duplicate id rows in `train` (same doc twice) are an upstream
-    malformation; the native path still flags correctly (per distinct
-    shingle, via salt-index counting) while the bitmap path counts each
-    row — run exact_dedup first if ids may repeat.
+    malformation; they still flag correctly (per distinct shingle, via
+    salt-index counting).
     """
-    if impl not in ('native', 'bitmap'):
-        raise ValueError("impl must be 'native' or 'bitmap', got "
-                         + repr(impl))
     sh = word_shingles_md5(F.col(text_col), k=shingle_k)
     bits = (benchmark.select(F.explode(sh).alias('sh'))
                      .select(F.explode(_bloom_positions(
@@ -378,13 +368,6 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
                      .distinct())
     t = (spread_partitions(train)
          .select(F.col(id_col).alias('doc_id'), F.explode(sh).alias('sh')))
-    if impl == 'bitmap':
-        bc = _bloom_pack_bitmap(train.sparkSession, bits, bloom_bits)
-        flags = _bloom_member_flags(t, bc, bloom_hashes, bloom_bits, seed)
-        return (flags.groupBy('doc_id')
-                     .agg(F.sum('flag').cast('long')
-                          .alias('n_flagged_shingles'))
-                     .where(F.col('n_flagged_shingles') >= min_hits))
     tp = (t.select('doc_id', 'sh', F.posexplode(_bloom_positions(
               F.col('sh'), bloom_hashes, bloom_bits, seed))
               .alias('__i', 'pos'))
@@ -411,140 +394,110 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        num_perm: int = 64, shingle_k: int = 3,
-                       seed: int = 42, engine: str = 'vectorized',
-                       hash_fn: str = 'crc32',
+                       seed: int = 42, hash_fn: str = 'crc32',
                        carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """(id, signature array<long>[num_perm], shingles) per document.
 
     Each permutation j: min over shingles s of (a_j*s + b_j) mod M.
 
-    engine='vectorized' (default): shingle hashing stays native (xxhash64 in
-    the JVM), the num_perm×|shingles| min-reduction runs as an Arrow-batched
-    pandas UDF doing one numpy matrix op per document.  Spark's higher-order
-    array functions (transform/array_min) execute *interpreted* — num_perm
-    interpreted lanes over every shingle are ~10× slower than one vectorized
-    matmul-shaped reduction, measured at sf0.1.
-
-    engine='native': pure Catalyst expressions (no Python in the plan) —
-    identical results, useful where Python workers are undesirable.
+    One Arrow-batched pass: Python-regex tokenize → 32-bit shingle hashes
+    → one numpy (num_perm × |shingles|) min-reduction per tile of
+    documents.  Spark's higher-order array functions (transform/array_min)
+    execute *interpreted* — num_perm interpreted lanes over every shingle
+    are ~10× slower than one vectorized matmul-shaped reduction, measured
+    at sf0.1.
 
     hash_fn: 'crc32' (cheapest, default) or 'md5' — 32-bit shingle hash from
     the first 8 md5 hex chars, reproducible in any engine with md5()
-    (used by the DuckDB differential oracle).
+    (used by the DuckDB differential oracle).  Both are stable across
+    runs and workers.
     """
     df = spread_partitions(df)
     params = _perm_params(num_perm, seed)
+    a_vec = [a for a, _ in params]
+    b_vec = [b for _, b in params]
+    k = shingle_k
+    use_md5 = hash_fn == 'md5'
+    flush_uniq = (_MINHASH_FLUSH_UNIQ if _MINHASH_FLUSH_UNIQ
+                  else max(1024, _MINHASH_TILE_BYTES // (8 * num_perm)))
+    src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'),
+                    *[F.col(c) for c in carry_cols])
+    carry_ddl = ''.join(', {} {}'.format(c, df.schema[c].dataType.simpleString())
+                        for c in carry_cols)
 
-    if engine == 'vectorized':
-        # One Arrow-batched pass: Python-regex tokenize → 32-bit shingle
-        # hashes → numpy (num_perm × |shingles|) min-reduction.  ~10× faster
-        # than interpreted Catalyst HOF lanes at equal determinism (both
-        # hash choices are stable across runs/workers).
-        a_vec = [a for a, _ in params]
-        b_vec = [b for _, b in params]
-        k = shingle_k
-        use_md5 = hash_fn == 'md5'
-        flush_uniq = (_MINHASH_FLUSH_UNIQ if _MINHASH_FLUSH_UNIQ
-                      else max(1024, _MINHASH_TILE_BYTES // (8 * num_perm)))
-        src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'),
-                        *[F.col(c) for c in carry_cols])
-        carry_ddl = ''.join(', {} {}'.format(c, df.schema[c].dataType.simpleString())
-                            for c in carry_cols)
+    def run(batches):
+        import hashlib
+        import re as _re
+        import zlib
 
-        def run(batches):
-            import hashlib
-            import re as _re
-            import zlib
+        import numpy as np
+        import pandas as pd
+        if use_md5:
+            h32 = lambda bs: int(hashlib.md5(bs).hexdigest()[:8], 16)  # noqa: E731
+        else:
+            h32 = zlib.crc32
+        A = np.asarray(a_vec, dtype=np.int64)[:, None]
+        B = np.asarray(b_vec, dtype=np.int64)[:, None]
+        token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
+        for pdf in batches:
+            # Hash each distinct shingle once per tile (duplicate docs
+            # share every shingle; even unrelated docs share many), and
+            # run the num_perm × |uniq| permutation table as one matrix
+            # op per TILE, slicing per-doc columns out of it — instead
+            # of per-doc hashing + per-doc matmuls.  A tile closes once
+            # it accumulates _MINHASH_FLUSH_UNIQ distinct shingle
+            # hashes, so peak memory is bounded regardless of how
+            # vocabulary-diverse the batch is (an unbounded batch-level
+            # table reaches multi-GB on disjoint-vocabulary corpora).
+            uniq: dict[int, int] = {}   # 32-bit shingle hash → column
+            gmemo: dict[str, int] = {}  # gram text → hash (per tile)
+            cols_per_doc: list = []
+            sh_out: list = []
+            sig_out: list = []
 
-            import numpy as np
-            import pandas as pd
-            if use_md5:
-                h32 = lambda bs: int(hashlib.md5(bs).hexdigest()[:8], 16)  # noqa: E731
-            else:
-                h32 = zlib.crc32
-            A = np.asarray(a_vec, dtype=np.int64)[:, None]
-            B = np.asarray(b_vec, dtype=np.int64)[:, None]
-            token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
-            for pdf in batches:
-                # Hash each distinct shingle once per tile (duplicate docs
-                # share every shingle; even unrelated docs share many), and
-                # run the num_perm × |uniq| permutation table as one matrix
-                # op per TILE, slicing per-doc columns out of it — instead
-                # of per-doc hashing + per-doc matmuls.  A tile closes once
-                # it accumulates _MINHASH_FLUSH_UNIQ distinct shingle
-                # hashes, so peak memory is bounded regardless of how
-                # vocabulary-diverse the batch is (an unbounded batch-level
-                # table reaches multi-GB on disjoint-vocabulary corpora).
-                uniq: dict[int, int] = {}   # 32-bit shingle hash → column
-                gmemo: dict[str, int] = {}  # gram text → hash (per tile)
-                cols_per_doc: list = []
-                sh_out: list = []
-                sig_out: list = []
+            def flush():
+                s = np.fromiter(uniq, dtype=np.int64, count=len(uniq))
+                perm = (A * s[None, :] + B) % _PRIME31  # num_perm × n_uniq
+                for cols in cols_per_doc:
+                    sh_out.append(s[cols])
+                    sig_out.append(perm[:, cols].min(axis=1))
+                uniq.clear()
+                gmemo.clear()
+                cols_per_doc.clear()
 
-                def flush():
-                    s = np.fromiter(uniq, dtype=np.int64, count=len(uniq))
-                    perm = (A * s[None, :] + B) % _PRIME31  # num_perm × n_uniq
-                    for cols in cols_per_doc:
-                        sh_out.append(s[cols])
-                        sig_out.append(perm[:, cols].min(axis=1))
-                    uniq.clear()
-                    gmemo.clear()
-                    cols_per_doc.clear()
+            for text in pdf['__text']:
+                toks = token_rgx.findall((text or '').lower())
+                if len(toks) >= k:
+                    grams = {' '.join(toks[i:i + k])
+                             for i in range(len(toks) - k + 1)}
+                else:
+                    grams = {' '.join(toks)}
+                # column set keyed by HASH value: two grams colliding
+                # under the 32-bit hash collapse to one column, so the
+                # emitted shingle arrays stay duplicate-free — matching
+                # the SQL oracle's list_distinct.
+                cols = {uniq.setdefault(
+                            gmemo.get(g) if g in gmemo
+                            else gmemo.setdefault(g, h32(g.encode('utf-8'))),
+                            len(uniq))
+                        for g in grams}
+                cols_per_doc.append(np.fromiter(cols, dtype=np.intp,
+                                                count=len(cols)))
+                if len(uniq) >= flush_uniq:
+                    flush()
+            flush()
+            out = {'doc_id': pdf['doc_id'],
+                   'shingles': pd.Series(sh_out, index=pdf.index, dtype='object'),
+                   'signature': pd.Series(sig_out, index=pdf.index, dtype='object')}
+            for c in carry:
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
 
-                for text in pdf['__text']:
-                    toks = token_rgx.findall((text or '').lower())
-                    if len(toks) >= k:
-                        grams = {' '.join(toks[i:i + k])
-                                 for i in range(len(toks) - k + 1)}
-                    else:
-                        grams = {' '.join(toks)}
-                    # column set keyed by HASH value: two grams colliding
-                    # under the 32-bit hash collapse to one column, so the
-                    # emitted shingle arrays stay duplicate-free — matching
-                    # the native path's array_distinct-after-hash and the
-                    # SQL oracle's list_distinct.
-                    cols = {uniq.setdefault(
-                                gmemo.get(g) if g in gmemo
-                                else gmemo.setdefault(g, h32(g.encode('utf-8'))),
-                                len(uniq))
-                            for g in grams}
-                    cols_per_doc.append(np.fromiter(cols, dtype=np.intp,
-                                                    count=len(cols)))
-                    if len(uniq) >= flush_uniq:
-                        flush()
-                flush()
-                out = {'doc_id': pdf['doc_id'],
-                       'shingles': pd.Series(sh_out, index=pdf.index, dtype='object'),
-                       'signature': pd.Series(sig_out, index=pdf.index, dtype='object')}
-                for c in carry:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
-
-        carry = list(carry_cols)
-        return src.mapInPandas(
-            run,
-            schema='doc_id long, shingles array<long>, signature array<long>'
-                   + carry_ddl)
-
-    sh = word_shingles(F.col(text_col), k=shingle_k)
-    df = df.select(F.col(id_col).alias('doc_id'), sh.alias('shingles'),
-                   *[F.col(c) for c in carry_cols])
-
-    # exchange barrier: without it Catalyst collapses the two projections and
-    # re-inlines the (regex-heavy) shingle expression into each of the
-    # num_perm signature lanes — shingles must be computed once per row
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-    def _perm_fn(a, b):
-        # closure factory: pyspark infers higher-order-arity from the lambda
-        # signature, so params can't ride along as default args
-        return lambda s: (s.bitwiseAND(F.lit(_MASK32)) * F.lit(a) + F.lit(b)) % F.lit(_PRIME31)
-
-    sig = F.array(*[
-        F.array_min(F.transform(F.col('shingles'), _perm_fn(a, b)))
-        for a, b in params
-    ])
-    return df.select('doc_id', 'shingles', sig.alias('signature'), *carry_cols)
+    carry = list(carry_cols)
+    return src.mapInPandas(
+        run,
+        schema='doc_id long, shingles array<long>, signature array<long>'
+               + carry_ddl)
 
 
 def _band_keys(sig_df: DataFrame, bands: int, rows_per_band: int) -> DataFrame:

@@ -111,10 +111,10 @@ def stream_decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     documents whose shingles are bloom-members of the (static)
     benchmark set.
 
-    The benchmark collapses ONCE at plan-build time into the same
-    bloom_bits-wide bitmap as ops.dedup.decontaminate_bloom
-    (impl='bitmap'): a bloom_bits/8-byte broadcast, fixed no matter how
-    large the benchmark grows.  Each micro-batch shingles in-scan
+    The benchmark collapses ONCE at plan-build time into a
+    bloom_bits-wide bitmap of the same bit positions as
+    ops.dedup.decontaminate_bloom: a bloom_bits/8-byte broadcast, fixed
+    no matter how large the benchmark grows.  Each micro-batch shingles in-scan
     (native md5), tests membership in a STATELESS Arrow kernel, and
     only bloom-positive shingle rows reach the one streaming
     aggregation — so state is bounded to flagged documents, exactly the

@@ -54,22 +54,6 @@ def dir_bytes(path: str) -> int | None:
         return None
 
 
-def estimated_input_bytes(df) -> int | None:
-    """Catalyst's size estimate for a BATCH DataFrame's optimized plan
-    (parquet: sum of file sizes after partition pruning — the same
-    footer-level statistics the planner uses).  None when unavailable
-    or when the estimate is the unknown-sentinel (defaultSizeInBytes,
-    astronomically large)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
-    if size <= 0 or size >= (1 << 50):   # 1 PiB+ → unknown sentinel
-        return None
-    return size
-
-
 # Parallelism floor for size-derived STREAMING widths (allow_below):
 # below it the per-batch Arrow/state work serializes — the r16 A/B
 # measured 2 partitions nearly doubling the user-totals drain while 8
@@ -121,17 +105,7 @@ def input_scan_bytes(df) -> int | None:
     tiny for aggregations — this measures what the job will READ, the
     quantity shuffle width should scale with.  None when any leaf's
     estimate is the unknown sentinel."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            size = int(leaves.apply(i).stats().sizeInBytes())
-            if size >= (1 << 50):   # defaultSizeInBytes unknown sentinel
-                return None
-            total += max(size, 0)
-        return total
-    except Exception:
-        return None
+    return _plan_leaf_bytes(df._jdf.queryExecution().optimizedPlan())
 
 
 # Session-conf stash of the DESIGNED wide AQE initial width (set by
@@ -148,7 +122,7 @@ def apply_plan_width(df, expansion: float = 4.0,
                      bytes_per_partition: int | None = None):
     """Decide the AQE ``initialPartitionNum`` for ``df``'s upcoming
     execution AT BUILD TIME and set it on the session — the engine-layer
-    home of the r15/r16 ``scoped_initial_width`` policy (r16 verdict #1:
+    home of the r15/r16 bench-scoped width policy (r16 verdict #1:
     an optimization that only ran where the bench's stopwatch was is
     indistinguishable from bench tuning, so the bench now does a plain
     noop write and every query builder applies this instead).
@@ -228,9 +202,9 @@ def apply_plan_width(df, expansion: float = 4.0,
 
 
 def _plan_leaf_bytes(jplan) -> int | None:
-    """Sum of leaf-relation size estimates of a (java) logical plan —
-    the analyzed-plan twin of :func:`input_scan_bytes`.  None when any
-    leaf reports the unknown sentinel."""
+    """Sum of leaf-relation size estimates of a (java) logical plan
+    (analyzed or optimized).  None when any leaf reports the unknown
+    sentinel."""
     try:
         leaves = jplan.collectLeaves()
         total = 0
@@ -314,56 +288,6 @@ def _has_node(jplan, class_prefix: str) -> bool:
         for i in range(ch.size()):
             stack.append(ch.apply(i))
     return False
-
-
-@contextlib.contextmanager
-def scoped_initial_width(spark, df, expansion: float = 4.0):
-    """Batch counterpart of the streaming drain scoping (r15 verdict
-    #7): the session's high AQE ``initialPartitionNum`` is the decade
-    rule's mechanism for LARGE shuffles, but on sub-advisory inputs it
-    buys nothing (AQE coalesces straight back down) while costing real
-    map-side overhead — every map task opens initial-width shuffle-file
-    blocks, ~0.5-1 s on second-scale window queries (NOTES_r15 A/B).
-
-    The decision is deliberately BINARY: when ``expansion × input
-    bytes`` fits within ``base count × advisory`` — i.e. even the base
-    width already over-partitions this shuffle — plan at the session
-    base; otherwise keep the configured wide initial untouched.  No
-    intermediate widths: the r15 A/B measured the mid-range (4×base)
-    as pathological for repartition-pinned frames while both extremes
-    were fine, and the sf10 decade wins (bpe_vocab 90 s) were measured
-    at the full configured width.  Unknown sizes keep the configured
-    width — the safe direction at scale.
-
-    Plans carrying an explicit ``repartition(expr)`` also keep the
-    configured width: those frames pin at the uncoalesced count and
-    feed per-partition Arrow workers, where the r15 A/B measured wide >
-    narrow even on small inputs (NOTES_r15: the broadcast-model scoring
-    family slowed at every narrower width tried)."""
-    key = 'spark.sql.adaptive.coalescePartitions.initialPartitionNum'
-    nbytes = input_scan_bytes(df)
-    try:
-        if 'Repartition' in str(df._jdf.queryExecution().optimizedPlan()):
-            nbytes = None
-    except Exception:
-        nbytes = None
-    try:
-        cur = int(spark.conf.get(key))
-        base = int(spark.conf.get('spark.sql.shuffle.partitions'))
-    except Exception:
-        nbytes = None
-    if nbytes is None:
-        yield
-        return
-    want = math.ceil(nbytes * max(expansion, 1.0) / BYTES_PER_PARTITION)
-    if want > base or base >= cur:
-        yield
-        return
-    spark.conf.set(key, str(base))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, str(cur))
 
 
 @contextlib.contextmanager

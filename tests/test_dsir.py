@@ -94,17 +94,6 @@ def test_dsir_sample_threshold_path(spark, corpora):
     spark.catalog.clearCache()
 
 
-def test_bloom_decontaminate_impls_agree(spark, sf_dir):
-    from rbql_spark.ops.dedup import decontaminate_bloom
-    docs = spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))
-    bench = docs.filter(F.col('doc_id') % 50 == 0).select('doc_id', 'text')
-    nat = {tuple(r) for r in decontaminate_bloom(
-        docs, bench, bloom_bits=1 << 16).collect()}
-    bit = {tuple(r) for r in decontaminate_bloom(
-        docs, bench, bloom_bits=1 << 16, impl='bitmap').collect()}
-    assert nat == bit and nat
-
-
 def test_bloom_decontaminate_superset_and_saturation(spark):
     from rbql_spark.ops.dedup import decontaminate, decontaminate_bloom
     docs = spark.createDataFrame(
@@ -223,8 +212,6 @@ def test_bloom_decontaminate_duplicate_rows_still_flag(spark):
                for r in decontaminate_bloom(docs, bench,
                                             bloom_bits=1 << 20).collect()}
     assert flagged == {1: 4}  # per distinct shingle, duplicates collapsed
-    with pytest.raises(ValueError, match="'native' or 'bitmap'"):
-        decontaminate_bloom(docs, bench, impl='numpy')
 
 
 def test_mix_corpora_zero_token_source_error(spark):

@@ -20,7 +20,9 @@ def load_cases():
         return [c for c in json.load(f) if c.get('query_python')]
 
 
-CASES = load_cases()
+# an absent corpus parametrizes over no cases, so the skipif above (not a
+# FileNotFoundError at collection) decides what the run reports
+CASES = load_cases() if os.path.exists(CORPUS_PATH) else []
 
 
 @pytest.mark.parametrize('case', CASES, ids=[c['test_name'].replace(' ', '_') for c in CASES])

@@ -3,7 +3,7 @@ import os
 
 from rbql_spark.tuning import (
     BYTES_PER_PARTITION, advise_shuffle_partitions, dir_bytes,
-    estimated_input_bytes, scoped_shuffle_partitions,
+    scoped_shuffle_partitions,
 )
 
 
@@ -49,17 +49,6 @@ def test_scoped_shuffle_partitions_restores(spark):
     with scoped_shuffle_partitions(spark, 17):
         assert spark.conf.get(key) == '17'
     assert spark.conf.get(key) == prev
-
-
-def test_estimated_input_bytes_parquet(spark, tmp_path):
-    p = str(tmp_path / 'sz.parquet')
-    spark.range(10_000).write.parquet(p)
-    df = spark.read.parquet(p)
-    est = estimated_input_bytes(df)
-    disk = dir_bytes(p)
-    assert est is not None and est > 0
-    # Catalyst's estimate is the file-size sum (footer stats)
-    assert 0.5 * disk <= est <= 2 * disk
 
 
 def test_dir_bytes_counts_files(tmp_path):
